@@ -10,16 +10,34 @@ labeled dataset carried as a DataFrame with one row per chunk:
 
 Design (SURVEY.md §1.5): key columns are real Spark columns so Catalyst
 prunes/groups/shuffles them natively; array payloads are opaque binary
-moved by Arrow into pandas UDFs. Driver holds the ``Template`` (schema:
+moved by Arrow into Python UDFs. Driver holds the ``Template`` (schema:
 dim sizes, var dtypes, coordinates) and the chunk grid; all per-chunk
-compute is vectorized NumPy inside ``mapInPandas``/``applyInPandas``.
+compute is vectorized NumPy inside those UDFs.
+
+One Python node per Spark stage: the narrow chunk ops — the Zarr and
+``from_numpy`` reads, ``map_blocks`` and every method built on it,
+``split_chunks`` and ``split_variables`` — do not emit a UDF each. They append a generator
+over ``(offsets, vars, NDDataset)`` to the Dataset's pending
+:class:`Chain`, and the chain runs as ONE ``mapInArrow`` (each chunk
+decoded and encoded once per stage, as the reference gets from Beam's
+fusion). A chain ends at:
+- a wide op: ``consolidate_chunks``/``consolidate_variables`` materialize
+  the chain feeding them, and start a new one inside their own
+  ``applyInArrow``, so the ops after the shuffle run in that same node;
+- reading (or persisting) ``.df``: it emits the chain and is memoized, and
+  later ops start from that frame;
+- a sink: ``to_zarr``'s write and ``to_table``'s explode are the tail of
+  the chain they end;
+- an op not on the chain (e.g. the reductions, the rolling halos): it
+  reads ``.df``. ``isel`` and ``zip_map`` read it too, filter or join in
+  the JVM, and start a new chain after that.
 
 Scale notes:
 - chunk enumeration is ``spark.range(chunk_count)`` — no driver-side key
   materialization at any chunk count (reference needed explicit sharding
   above 200k keys, ``core.py:544-670``);
 - rechunk = the reference's split→GroupByKey→consolidate, expressed as a
-  narrow ``mapInPandas`` + ``groupBy(off cols).applyInPandas``; multistage
+  narrow split stage + ``groupBy(off cols).applyInArrow``; multistage
   plans from :mod:`xarray_beam_spark.plans.rechunk_plan` bound every
   shuffle group ≤ max_mem;
 - reductions pre-aggregate inside each chunk (narrow) before the shuffle,
@@ -29,6 +47,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import copy
 import itertools
 import math
 import operator
@@ -166,6 +185,88 @@ def _vars_token(vars: Iterable[str] | None) -> str | None:
 
 
 # ---------------------------------------------------------------------------
+# Pending per-chunk chains: one Python node per Spark stage
+# ---------------------------------------------------------------------------
+
+# A chunk in flight inside a fused Python node: its element offset per
+# dataset dim, its ``vars`` token and the decoded block.
+Chunk = tuple  # (dict[str, int], str | None, NDDataset)
+
+# encoded chunk rows are flushed to the JVM in Arrow batches of about
+# this many payload bytes, so a task holds one batch, not its partition
+_FLUSH_BYTES = 8 << 20
+
+
+@dataclass
+class Chain:
+    """A per-chunk pipeline and, once emitted, its chunk-row frame.
+
+    ``source`` turns one Arrow input of ``df`` into chunks: a RecordBatch
+    for a ``mapInArrow``, or — with ``group_by`` — one group's
+    ``(key, Table)`` for a ``groupBy(*group_by).applyInArrow``. Each of
+    ``stages`` maps a chunk iterator to a chunk iterator. The narrow chunk
+    ops (``map_blocks``, ``split_chunks``, ``split_variables``) append
+    stages; the chain runs, with a tail that encodes rows or sinks them, as
+    ONE Python node (:meth:`Dataset._emit`). ``rows`` memoizes the frame
+    :attr:`Dataset.df` emits; from then on, new ops start from it.
+    """
+
+    df: DataFrame
+    source: Callable[..., Iterator[Chunk]]
+    group_by: tuple[str, ...] | None = None
+    stages: tuple[Callable[[Iterator[Chunk]], Iterator[Chunk]], ...] = ()
+    rows: DataFrame | None = None
+
+
+def _row_chunks(dims: Sequence[str]) -> Callable[[Any], Iterator[Chunk]]:
+    """Chain source over chunk rows: payloads decode zero-copy (read-only)
+    from the batch's binary value buffer."""
+
+    def source(batch) -> Iterator[Chunk]:
+        offs = [batch.column(off_col(d)).to_numpy() for d in dims]
+        vars_ = batch.column("vars").to_pylist()
+        payloads = batch.column("payload")
+        for i in range(batch.num_rows):
+            yield (
+                {d: int(o[i]) for d, o in zip(dims, offs)},
+                vars_[i],
+                decode_chunk(memoryview(payloads[i].as_buffer())),
+            )
+
+    return source
+
+
+def _encode_rows(dims: Sequence[str]) -> Callable[[Iterator[Chunk]], Iterator["pa.RecordBatch"]]:
+    """Chain tail that encodes each chunk once into chunk-row batches."""
+    names = [off_col(d) for d in dims] + ["vars", "payload"]
+
+    def batch(rows: list) -> "pa.RecordBatch":
+        return pa.RecordBatch.from_arrays(
+            [pa.array([offs[d] for offs, _, _ in rows], pa.int64()) for d in dims]
+            + [
+                pa.array([v for _, v, _ in rows], pa.string()),
+                pa.array([p for _, _, p in rows], pa.binary()),
+            ],
+            names=names,
+        )
+
+    def tail(chunks: Iterator[Chunk]) -> Iterator["pa.RecordBatch"]:
+        rows: list = []
+        size = 0
+        for offs, vars_, ds in chunks:
+            payload = encode_chunk(ds)
+            rows.append((offs, vars_, payload))
+            size += len(payload)
+            if size >= _FLUSH_BYTES:
+                yield batch(rows)
+                rows, size = [], 0
+        if rows:
+            yield batch(rows)
+
+    return tail
+
+
+# ---------------------------------------------------------------------------
 # Dataset
 # ---------------------------------------------------------------------------
 
@@ -176,13 +277,17 @@ class Dataset:
     def __init__(
         self,
         spark: SparkSession,
-        df: DataFrame,
+        df: DataFrame | Chain,
         template: Template,
         chunks: Mapping[str, int],
         split_vars: bool = False,
     ):
         self.spark = spark
-        self.df = df
+        # a DataFrame of chunk rows is already materialized; a Chain is
+        # emitted (and memoized) the first time .df is read
+        if not isinstance(df, Chain):
+            df = Chain(df, _row_chunks(sorted(template.sizes)), rows=df)
+        self._chain = df
         self.template = template
         self.chunks = core.normalize_chunks(
             chunks, template.sizes, itemsize=template.itemsize(split_vars)
@@ -195,6 +300,81 @@ class Dataset:
         # re-plan the read (reading only what's needed, no shuffle) instead
         # of filtering materialized chunks. Dropped on any transform.
         self._scan = None
+
+    # -- the pending chain -------------------------------------------------
+
+    @property
+    def df(self) -> DataFrame:
+        """The chunk-row DataFrame. Reading it emits the pending chain as
+        one Python node and memoizes it, so ``ds.df.persist()`` caches
+        the frame every later op on ``ds`` starts from."""
+        ch = self._chain
+        if ch.rows is None:
+            ch.rows = self._emit(_encode_rows(self.dims), chunk_row_schema(self.dims))
+        return ch.rows
+
+    def _pending(self) -> Chain:
+        """The chain new ops extend: this Dataset's own while it is
+        pending, else a fresh one over its materialized rows."""
+        ch = self._chain
+        return ch if ch.rows is None else Chain(ch.rows, _row_chunks(self.dims))
+
+    def _then(
+        self,
+        stage: Callable[[Iterator[Chunk]], Iterator[Chunk]],
+        template: Template | None = None,
+        chunks: Mapping[str, int] | None = None,
+        split_vars: bool | None = None,
+    ) -> "Dataset":
+        """A Dataset whose chain is this one's plus ``stage``."""
+        ch = self._pending()
+        return Dataset(
+            self.spark,
+            Chain(ch.df, ch.source, ch.group_by, ch.stages + (stage,)),
+            self.template if template is None else template,
+            self.chunks if chunks is None else chunks,
+            self.split_vars if split_vars is None else split_vars,
+        )
+
+    def _relabel(self, template: Template | None = None, chunks: Mapping[str, int] | None = None) -> "Dataset":
+        """The same chunk rows under new metadata: the two Datasets share
+        one chain, so a pending chain stays pending and is emitted once."""
+        return Dataset(
+            self.spark,
+            self._chain,
+            self.template if template is None else template,
+            self.chunks if chunks is None else chunks,
+            self.split_vars,
+        )
+
+    def _emit(self, tail: Callable[[Iterator[Chunk]], Iterator["pa.RecordBatch"]], schema: T.StructType) -> DataFrame:
+        """Run the pending chain and then ``tail`` (which turns chunks into
+        Arrow batches of ``schema``) in ONE Python node: a ``mapInArrow``,
+        or the wide op's ``applyInArrow`` when the chain starts at one."""
+        ch = self._pending()
+        source, stages = ch.source, ch.stages
+
+        def run(chunks: Iterator[Chunk]) -> Iterator["pa.RecordBatch"]:
+            for stage in stages:
+                chunks = stage(chunks)
+            return tail(chunks)
+
+        if ch.group_by is None:
+
+            def fused(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+                return run(c for b in batches for c in source(b))
+
+            return ch.df.mapInArrow(fused, schema)
+
+        def fused_group(key: tuple, tbl: "pa.Table") -> "pa.Table":
+            out = list(run(source(key, tbl)))
+            if out:
+                return pa.Table.from_batches(out)
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            return to_arrow_schema(schema).empty_table()
+
+        return ch.df.groupBy(*ch.group_by).applyInArrow(fused_group, schema)
 
     # -- properties --------------------------------------------------------
 
@@ -265,36 +445,27 @@ class Dataset:
         var_groups: list[str | None] = (
             sorted(source.data_vars) if split_vars else [None]
         )
-        schema = chunk_row_schema(sizes)
         dims_sorted = sorted(sizes)
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def gen(batch) -> Iterator[Chunk]:
+            # the chain's source: one chunk per spark.range id
             ds = bc.value
-            for pdf in batches:
-                rows = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    grid_i, var_i = divmod(i, len(var_groups))
-                    offsets = core.key_for_index(grid_i, sizes, cchunks)
-                    slices = {
-                        d: slice(o, min(o + cchunks[d], sizes[d]))
-                        for d, o in offsets.items()
-                    }
-                    chunk = ds.isel(slices)
-                    vg = var_groups[var_i]
-                    if vg is not None:
-                        chunk = chunk[[vg]]
-                    row = {off_col(d): offsets[d] for d in dims_sorted}
-                    row["vars"] = vg
-                    row["payload"] = encode_chunk(chunk)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            for i in batch.column("id").to_numpy():
+                grid_i, var_i = divmod(int(i), len(var_groups))
+                offsets = core.key_for_index(grid_i, sizes, cchunks)
+                slices = {
+                    d: slice(o, min(o + cchunks[d], sizes[d]))
+                    for d, o in offsets.items()
+                }
+                chunk = ds.isel(slices)
+                vg = var_groups[var_i]
+                if vg is not None:
+                    chunk = chunk[[vg]]
+                yield {d: offsets[d] for d in dims_sorted}, vg, chunk
 
         total = n_chunks * len(var_groups)
         rng = spark.range(0, total, 1, min(total, _default_parallelism(spark)))
-        df = rng.mapInPandas(gen, schema)
-        out = Dataset(spark, df, template, cchunks, split_vars)
+        out = Dataset(spark, Chain(rng, gen), template, cchunks, split_vars)
         out._scan = MemoryScan(source)
         return out
 
@@ -481,48 +652,40 @@ class Dataset:
         chunks = dict(self.chunks)
         split_vars = self.split_vars
         var_meta = dict(tmpl.var_meta)
-        dims_sorted = self.dims
-        schema = chunk_row_schema(dims_sorted)
 
-        def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    offs = {d: int(r[off_col(d)]) for d in dims_sorted}
-                    for d, off in offs.items():
-                        if d in ds.sizes:
-                            if off % chunks[d] != 0:
-                                raise ValueError(
-                                    f"chunk offset {off} along {d!r} is not a "
-                                    f"multiple of chunk size {chunks[d]}"
-                                )
-                            expect = min(chunks[d], sizes[d] - off)
-                            if ds.sizes[d] != expect:
-                                raise ValueError(
-                                    f"chunk at {offs} has size {ds.sizes[d]} along "
-                                    f"{d!r}; grid expects {expect}"
-                                )
-                    vtoken = r["vars"]
-                    if split_vars and vtoken is None:
-                        raise ValueError(f"split_vars dataset has chunk at {offs} with vars=None")
-                    for name, var in ds.data_vars.items():
-                        if name not in var_meta:
-                            raise ValueError(f"unexpected variable {name!r} at {offs}")
-                        want_dims, want_dtype = var_meta[name]
-                        if var.dims != tuple(want_dims):
+        def check(chunks_in: Iterator[Chunk]) -> Iterator[Chunk]:
+            for offs, vtoken, ds in chunks_in:
+                for d, off in offs.items():
+                    if d in ds.sizes:
+                        if off % chunks[d] != 0:
                             raise ValueError(
-                                f"variable {name!r} dims {var.dims} != template {want_dims}"
+                                f"chunk offset {off} along {d!r} is not a "
+                                f"multiple of chunk size {chunks[d]}"
                             )
-                        if var.values.dtype.str != want_dtype:
+                        expect = min(chunks[d], sizes[d] - off)
+                        if ds.sizes[d] != expect:
                             raise ValueError(
-                                f"variable {name!r} dtype {var.values.dtype.str} != "
-                                f"template {want_dtype}"
+                                f"chunk at {offs} has size {ds.sizes[d]} along "
+                                f"{d!r}; grid expects {expect}"
                             )
-                yield pdf
+                if split_vars and vtoken is None:
+                    raise ValueError(f"split_vars dataset has chunk at {offs} with vars=None")
+                for name, var in ds.data_vars.items():
+                    if name not in var_meta:
+                        raise ValueError(f"unexpected variable {name!r} at {offs}")
+                    want_dims, want_dtype = var_meta[name]
+                    if var.dims != tuple(want_dims):
+                        raise ValueError(
+                            f"variable {name!r} dims {var.dims} != template {want_dims}"
+                        )
+                    if var.values.dtype.str != want_dtype:
+                        raise ValueError(
+                            f"variable {name!r} dtype {var.values.dtype.str} != "
+                            f"template {want_dtype}"
+                        )
+                yield offs, vtoken, ds
 
-        return Dataset(
-            self.spark, self.df.mapInPandas(check, schema), tmpl, chunks, split_vars
-        )
+        return self._then(check)
 
     def pipe(self, func: Callable, *args, **kwargs):
         """Method-chaining helper (reference ``dataset.py:1139-1141``)."""
@@ -678,7 +841,8 @@ class Dataset:
 
     def to_table(self, dropna: bool = True) -> DataFrame:
         """Chunked grid → long format: one row per grid cell with dim
-        coordinate columns + one column per variable. Narrow (mapInPandas)."""
+        coordinate columns + one column per variable. The explode is the
+        tail of the pending chain, in the same Python node."""
         if self.split_vars:
             return self.consolidate_variables().to_table(dropna=dropna)
         tmpl = self.template
@@ -689,20 +853,15 @@ class Dataset:
         names = [f.name for f in schema.fields]
         pa_types = [_spark_to_arrow_type(f.dataType) for f in schema.fields]
 
-        # mapInArrow, not mapInPandas: column arrays go numpy → Arrow
-        # directly (one cast per column) instead of through a pandas frame —
-        # measured ~1.4x on wide explodes, and no object churn for strings.
-        def explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            for rb in batches:
-                for payload in rb.column("payload"):
-                    out = explode_chunk_batch(
-                        decode_chunk(payload.as_py()),
-                        dims, var_names, dropna, names, pa_types,
-                    )
-                    if out is not None:
-                        yield out
+        # column arrays go numpy → Arrow directly (one cast per column),
+        # not through a pandas frame: no object churn for strings
+        def explode(chunks: Iterator[Chunk]) -> Iterator["pa.RecordBatch"]:
+            for _, _, ds in chunks:
+                out = explode_chunk_batch(ds, dims, var_names, dropna, names, pa_types)
+                if out is not None:
+                    yield out
 
-        return self.df.mapInArrow(explode, schema)
+        return self._emit(explode, schema)
 
     # Zarr IO lives in sources/zarr_io.py, which REPLACES these two
     # delegators with the real functions when it is imported (keeping
@@ -835,10 +994,8 @@ class Dataset:
                     f"{template.sizes[d]}"
                 )
         out_dims = sorted(template.sizes)
-        schema = chunk_row_schema(out_dims)
         in_sizes = self.sizes
         in_chunks = self.chunks
-        out_sizes = template.sizes
         from xarray_beam_spark.observability import get_counters
 
         _c = get_counters(self.spark)
@@ -848,33 +1005,26 @@ class Dataset:
             _c.acc("map_blocks.output_bytes"),
         )
 
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    # writable: func is USER code and may mutate in place
-                    ds = decode_chunk(r["payload"], writable=True)
-                    acc_in.add(1)
-                    acc_in_b.add(ds.nbytes)
-                    res = func(ds)
-                    acc_out_b.add(res.nbytes)
-                    row = {}
-                    for d in out_dims:
-                        if d in in_sizes:
-                            # scale offset by chunk-index (reference
-                            # ``dataset.py:335-358``)
-                            ci = int(r[off_col(d)]) // in_chunks[d]
-                            row[off_col(d)] = ci * new_chunks[d]
-                        else:
-                            row[off_col(d)] = 0
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(res)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def apply(chunks: Iterator[Chunk]) -> Iterator[Chunk]:
+            for offs, vars_, ds in chunks:
+                # func is USER code and may mutate its input in place
+                ds = _private_copy(ds)
+                acc_in.add(1)
+                acc_in_b.add(ds.nbytes)
+                res = func(ds)
+                acc_out_b.add(res.nbytes)
+                # scale offset by chunk-index (reference
+                # ``dataset.py:335-358``); a func-added dim starts at 0
+                yield (
+                    {
+                        d: offs[d] // in_chunks[d] * new_chunks[d] if d in in_sizes else 0
+                        for d in out_dims
+                    },
+                    vars_,
+                    res,
+                )
 
-        df = self.df.mapInPandas(apply, schema)
-        return Dataset(self.spark, df, template, new_chunks, self.split_vars)
+        return self._then(apply, template, new_chunks)
 
     # -- projections / indexing -------------------------------------------
 
@@ -986,41 +1136,26 @@ class Dataset:
             },
             attrs=self.template.attrs,
         )
-        all_dims = self.dims
         win = dict(windows)
 
-        def trim_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    sl = {}
-                    new_offs = {}
-                    for d in all_dims:
-                        off = int(r[off_col(d)])
-                        start, stop = win.get(d, (0, None))
-                        if d in ds.sizes:
-                            lo = max(0, start - off)
-                            hi = ds.sizes[d] if stop is None else min(ds.sizes[d], stop - off)
-                            if (lo, hi) != (0, ds.sizes[d]):
-                                sl[d] = slice(lo, hi)
-                            new_offs[d] = max(0, off - start)
-                        else:
-                            new_offs[d] = max(0, off - start)
-                    rows.append(
-                        {
-                            **{off_col(d): new_offs[d] for d in all_dims},
-                            "vars": r["vars"],
-                            "payload": encode_chunk(ds.isel(sl) if sl else ds),
-                        }
-                    )
-                if rows:
-                    yield pd.DataFrame(rows)
+        def trim(chunks_in: Iterator[Chunk]) -> Iterator[Chunk]:
+            for offs, vars_, ds in chunks_in:
+                sl = {}
+                new_offs = {}
+                for d, off in offs.items():
+                    start, stop = win.get(d, (0, None))
+                    if d in ds.sizes:
+                        lo = max(0, start - off)
+                        hi = ds.sizes[d] if stop is None else min(ds.sizes[d], stop - off)
+                        if (lo, hi) != (0, ds.sizes[d]):
+                            sl[d] = slice(lo, hi)
+                    new_offs[d] = max(0, off - start)
+                yield new_offs, vars_, ds.isel(sl) if sl else ds
 
-        schema = chunk_row_schema(all_dims)
-        df = pruned.mapInPandas(trim_map, schema)
+        # the offset filter runs in the JVM, before the chain's Python node
+        chain = Chain(pruned, _row_chunks(self.dims), stages=(trim,))
         chunks = {d: min(self.chunks[d], new_sizes[d]) for d in new_sizes}
-        out = Dataset(self.spark, df, tmpl, chunks, self.split_vars)
+        out = Dataset(self.spark, chain, tmpl, chunks, self.split_vars)
         if all(start % self.chunks[d] == 0 for d, (start, _) in windows.items()):
             return out  # start is chunk-aligned: offsets stayed regular
         # realign the irregular boundary chunks to the regular grid:
@@ -1282,61 +1417,39 @@ class Dataset:
             new_dim: z_chunk,
         }
         out_dims = sorted(out_tmpl.sizes)
-        schema = chunk_row_schema(out_dims)
         d0 = dims[0]
 
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):
-                    ds = decode_chunk(r["payload"])
-                    out_vars: dict[str, Variable] = {}
-                    for v, var in ds.data_vars.items():
-                        others_v = [d for d in var.dims if d not in dset]
-                        perm = others_v + dims
-                        arr = np.transpose(
-                            var.values, [var.dims.index(d) for d in perm]
-                        )
-                        out_vars[v] = Variable(
-                            tuple(others_v) + (new_dim,),
-                            arr.reshape(arr.shape[: len(others_v)] + (-1,)),
-                        )
-                    coords = {
-                        k: c
-                        for k, c in ds.coords.items()
-                        if not (set(c.dims) & dset)
-                    }
-                    # per-chunk slab of the product coords: d0's local
-                    # values expand over the full tail, tail dims tile
-                    # over the local d0 length
-                    for j, d in enumerate(dims):
-                        c = ds.coords.get(d)
-                        if c is None or c.dims != (d,):
-                            continue
-                        reps_inner = _prod(
-                            [ds.sizes[d2] for d2 in dims[j + 1 :]]
-                        )
-                        reps_outer = _prod([ds.sizes[d2] for d2 in dims[:j]])
-                        coords[d] = Variable(
-                            (new_dim,),
-                            np.tile(np.repeat(c.values, reps_inner), reps_outer),
-                        )
-                    row = {
-                        off_col(d): int(r[off_col(d)])
-                        for d in out_dims
-                        if d != new_dim
-                    }
-                    row[off_col(new_dim)] = int(r[off_col(d0)]) * tail
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(
-                        NDDataset(out_vars, coords, ds.attrs)
+        def apply(chunks: Iterator[Chunk]) -> Iterator[Chunk]:
+            for offs, vars_, ds in chunks:
+                out_vars: dict[str, Variable] = {}
+                for v, var in ds.data_vars.items():
+                    others_v = [d for d in var.dims if d not in dset]
+                    perm = others_v + dims
+                    arr = np.transpose(var.values, [var.dims.index(d) for d in perm])
+                    out_vars[v] = Variable(
+                        tuple(others_v) + (new_dim,),
+                        arr.reshape(arr.shape[: len(others_v)] + (-1,)),
                     )
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+                coords = {k: c for k, c in ds.coords.items() if not (set(c.dims) & dset)}
+                # per-chunk slab of the product coords: d0's local
+                # values expand over the full tail, tail dims tile
+                # over the local d0 length
+                for j, d in enumerate(dims):
+                    c = ds.coords.get(d)
+                    if c is None or c.dims != (d,):
+                        continue
+                    reps_inner = _prod([ds.sizes[d2] for d2 in dims[j + 1 :]])
+                    reps_outer = _prod([ds.sizes[d2] for d2 in dims[:j]])
+                    coords[d] = Variable(
+                        (new_dim,), np.tile(np.repeat(c.values, reps_inner), reps_outer)
+                    )
+                yield (
+                    {d: offs[d0] * tail if d == new_dim else offs[d] for d in out_dims},
+                    vars_,
+                    NDDataset(out_vars, coords, ds.attrs),
+                )
 
-        df = base.df.mapInPandas(apply, schema)
-        return Dataset(self.spark, df, out_tmpl, out_chunks, False)
+        return base._then(apply, out_tmpl, out_chunks)
 
     def unstack(
         self, dim: str, sizes: Mapping[str, int], coords: Mapping[str, np.ndarray] | None = None
@@ -1394,58 +1507,40 @@ class Dataset:
             **{d: int(sizes[d]) for d in new_names[1:]},
         }
         out_dims = sorted(out_tmpl.sizes)
-        schema = chunk_row_schema(out_dims)
         tail_shape = tuple(int(sizes[d]) for d in new_names[1:])
         bc_coords = self.spark.sparkContext.broadcast(
             {d: np.asarray(vals) for d, vals in (coords or {}).items()}
         )
 
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def apply(chunks: Iterator[Chunk]) -> Iterator[Chunk]:
             cvals = bc_coords.value
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):
-                    ds = decode_chunk(r["payload"])
-                    out_vars: dict[str, Variable] = {}
-                    k_rows = ds.sizes[dim] // tail
-                    for v, var in ds.data_vars.items():
-                        ax = var.dims.index(dim)
-                        others_v = [d for d in var.dims if d != dim]
-                        arr = np.moveaxis(var.values, ax, -1)
-                        arr = arr.reshape(arr.shape[:-1] + (k_rows,) + tail_shape)
-                        out_vars[v] = Variable(tuple(others_v) + tuple(new_names), arr)
-                    off0 = int(r[off_col(dim)]) // tail
-                    coords_out = {
-                        k2: c
-                        for k2, c in ds.coords.items()
-                        if dim not in c.dims
-                    }
-                    for i, d in enumerate(new_names):
-                        if d in cvals:
-                            if i == 0:
-                                coords_out[d] = Variable(
-                                    (d,), cvals[d][off0 : off0 + k_rows]
-                                )
-                            else:
-                                coords_out[d] = Variable((d,), cvals[d])
-                    row = {
-                        off_col(d): int(r[off_col(d)])
+            for offs, vars_, ds in chunks:
+                out_vars: dict[str, Variable] = {}
+                k_rows = ds.sizes[dim] // tail
+                for v, var in ds.data_vars.items():
+                    ax = var.dims.index(dim)
+                    others_v = [d for d in var.dims if d != dim]
+                    arr = np.moveaxis(var.values, ax, -1)
+                    arr = arr.reshape(arr.shape[:-1] + (k_rows,) + tail_shape)
+                    out_vars[v] = Variable(tuple(others_v) + tuple(new_names), arr)
+                off0 = offs[dim] // tail
+                coords_out = {k2: c for k2, c in ds.coords.items() if dim not in c.dims}
+                for i, d in enumerate(new_names):
+                    if d in cvals:
+                        if i == 0:
+                            coords_out[d] = Variable((d,), cvals[d][off0 : off0 + k_rows])
+                        else:
+                            coords_out[d] = Variable((d,), cvals[d])
+                yield (
+                    {
+                        d: off0 if d == new_names[0] else 0 if d in sizes else offs[d]
                         for d in out_dims
-                        if d not in sizes
-                    }
-                    row[off_col(new_names[0])] = off0
-                    for d in new_names[1:]:
-                        row[off_col(d)] = 0
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(
-                        NDDataset(out_vars, coords_out, ds.attrs)
-                    )
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+                    },
+                    vars_,
+                    NDDataset(out_vars, coords_out, ds.attrs),
+                )
 
-        df = base.df.mapInPandas(apply, schema)
-        return Dataset(self.spark, df, out_tmpl, out_chunks, False)
+        return base._then(apply, out_tmpl, out_chunks)
 
     def fillna(self, value: float) -> "Dataset":
         """Replace NaN holes with ``value`` (xarray ``Dataset.fillna`` with
@@ -1511,7 +1606,7 @@ class Dataset:
             coords=dict(tmpl.coords),
             attrs={**tmpl.attrs, **attrs},
         )
-        return Dataset(self.spark, self.df, out_tmpl, dict(self.chunks), self.split_vars)
+        return self._relabel(template=out_tmpl)
 
     def weighted_mean(self, dim: str, weights: np.ndarray) -> "Dataset":
         """Weighted mean over ``dim`` (xarray ``ds.weighted(w).mean(dim)``):
@@ -2031,55 +2126,38 @@ class Dataset:
             template, _ = _infer_result_meta(self.template, self.chunks, da, out_dummy)
         dims = self.dims
         offc = [off_col(d) for d in dims]
-        schema = chunk_row_schema(dims)
         a = self.df.select(*offc, F.col("payload").alias("__pa"))
         b = other.df.select(*offc, F.col("payload").alias("__pb"))
         joined = a.join(b, on=offc, how="inner")
 
-        def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    res = func(decode_chunk(r["__pa"]), decode_chunk(r["__pb"]))
-                    row = {off_col(d): int(r[off_col(d)]) for d in dims}
-                    row["vars"] = None
-                    row["payload"] = encode_chunk(res)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def combine(batch) -> Iterator[Chunk]:
+            # the chain's source: one chunk per joined pair
+            offs = [batch.column(c).to_numpy() for c in offc]
+            pas, pbs = batch.column("__pa"), batch.column("__pb")
+            for i in range(batch.num_rows):
+                res = func(
+                    decode_chunk(memoryview(pas[i].as_buffer())),
+                    decode_chunk(memoryview(pbs[i].as_buffer())),
+                )
+                yield {d: int(o[i]) for d, o in zip(dims, offs)}, None, res
 
-        df = joined.mapInPandas(combine, schema)
-        return Dataset(self.spark, df, template, self.chunks, False)
+        return Dataset(self.spark, Chain(joined, combine), template, self.chunks, False)
 
     # -- split / consolidate (reference rechunk.py) ------------------------
 
     def split_variables(self) -> "Dataset":
         """One chunk row per data variable (reference ``rechunk.py:457-489``).
-        Narrow: payload explode inside mapInPandas."""
+        Narrow: a stage of the pending chain."""
         if self.split_vars:
             return self
-        dims = self.dims
-        schema = chunk_row_schema(dims)
         var_names = self.template.var_names
 
-        def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    for v in var_names:
-                        sub = ds[[v]]
-                        rows.append(
-                            {
-                                **{off_col(d): int(r[off_col(d)]) for d in dims},
-                                "vars": v,
-                                "payload": encode_chunk(sub),
-                            }
-                        )
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def split(chunks: Iterator[Chunk]) -> Iterator[Chunk]:
+            for offs, _, ds in chunks:
+                for v in var_names:
+                    yield offs, v, ds[[v]]
 
-        return Dataset(self.spark, self.df.mapInPandas(split, schema), self.template, self.chunks, True)
+        return self._then(split, split_vars=True)
 
     def consolidate_variables(self) -> "Dataset":
         """Merge var-split rows at identical offsets (reference
@@ -2087,27 +2165,18 @@ class Dataset:
         if not self.split_vars:
             return self
         dims = self.dims
-        schema = chunk_row_schema(dims)
-        offc = [off_col(d) for d in dims]
+        parts_of = _row_chunks(dims)
+        from xarray_beam_spark.observability import get_counters
 
-        def merge(key: tuple, tbl: pa.Table) -> pa.Table:
-            payloads = tbl.column("payload")
-            parts = [
-                decode_chunk(memoryview(payloads[i].as_buffer()))
-                for i in range(tbl.num_rows)
-            ]
-            ds = NDDataset.merge(parts)
-            return pa.Table.from_arrays(
-                [pa.array([int(k.as_py())], pa.int64()) for k in key]
-                + [
-                    pa.array([None], pa.string()),
-                    pa.array([encode_chunk(ds)], pa.binary()),
-                ],
-                names=offc + ["vars", "payload"],
-            )
+        acc_groups = get_counters(self.spark).acc("consolidate.groups")
 
-        df = self.df.groupBy(*offc).applyInArrow(merge, schema)
-        return Dataset(self.spark, df, self.template, self.chunks, False)
+        def merge(key: tuple, tbl: "pa.Table") -> Iterator[Chunk]:
+            acc_groups.add(1)
+            parts = [ds for _, _, ds in parts_of(tbl)]
+            yield dict(zip(dims, [int(k.as_py()) for k in key])), None, NDDataset.merge(parts)
+
+        chain = Chain(self.df, merge, tuple(off_col(d) for d in dims))
+        return Dataset(self.spark, chain, self.template, self.chunks, False)
 
     def split_chunks(self, target_chunks: Mapping[str, int]) -> "Dataset":
         """Narrow split of each chunk to align to ``target_chunks``'s grid
@@ -2138,62 +2207,29 @@ class Dataset:
             tgt = {d: int(cur.get(d, sizes[d])) for d in sizes}
         else:
             tgt = dict(core.normalize_chunks(spec, sizes))
-        dims = self.dims
-        schema = chunk_row_schema(dims)
+        from xarray_beam_spark.observability import get_counters
 
-        names = [off_col(d) for d in dims] + ["vars", "payload"]
+        acc_pieces = get_counters(self.spark).acc("split.pieces")
 
-        def split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            # Arrow-native: payloads decode zero-copy from the batch's
-            # binary value buffer; each sub-chunk is encoded once into the
-            # output batch (no pandas object-cell round trip).
-            for batch in batches:
-                off_arrs = {d: batch.column(off_col(d)).to_numpy() for d in dims}
-                vars_arr = batch.column("vars")
-                payloads = batch.column("payload")
-                out_offs: dict[str, list[int]] = {d: [] for d in dims}
-                out_vars: list[str | None] = []
-                out_payloads: list[bytes] = []
-                for i in range(batch.num_rows):
-                    ds = decode_chunk(memoryview(payloads[i].as_buffer()))
-                    base = {d: int(off_arrs[d][i]) for d in dims}
-                    pieces = [({}, {})]  # (global offsets, local slices)
-                    for d in dims:
-                        if d not in ds.sizes:
-                            continue
-                        start = base[d]
-                        stop = start + ds.sizes[d]
-                        new_pieces = []
-                        for goff, lsl in pieces:
-                            for grid_off, lo, hi in core.chunk_bounds_overlap(start, stop, tgt[d]):
-                                g2 = dict(goff)
-                                s2 = dict(lsl)
-                                g2[d] = grid_off
-                                s2[d] = slice(lo - start, hi - start)
-                                new_pieces.append((g2, s2))
-                        pieces = new_pieces
-                    kvars = vars_arr[i].as_py()
-                    for goff, lsl in pieces:
-                        sub = ds.isel(lsl)
-                        # sub-chunk key offset = start of its overlap range
-                        for d in dims:
-                            out_offs[d].append(
-                                base[d] + lsl[d].start if d in lsl else base[d]
-                            )
-                        out_vars.append(kvars)
-                        out_payloads.append(encode_chunk(sub))
-                if out_vars:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(out_offs[d], pa.int64()) for d in dims]
-                        + [
-                            pa.array(out_vars, pa.string()),
-                            pa.array(out_payloads, pa.binary()),
-                        ],
-                        names=names,
-                    )
+        def split(chunks: Iterator[Chunk]) -> Iterator[Chunk]:
+            for base, kvars, ds in chunks:
+                extent = ds.sizes
+                pieces = [{}]  # local slices, one dict per piece
+                for d, start in base.items():
+                    if d not in extent:
+                        continue
+                    pieces = [
+                        {**lsl, d: slice(lo - start, hi - start)}
+                        for lsl in pieces
+                        for _, lo, hi in core.chunk_bounds_overlap(start, start + extent[d], tgt[d])
+                    ]
+                acc_pieces.add(len(pieces))
+                for lsl in pieces:
+                    # sub-chunk key offset = start of its overlap range
+                    offs = {d: o + lsl[d].start if d in lsl else o for d, o in base.items()}
+                    yield offs, kvars, ds.isel(lsl)
 
-        df = self.df.mapInArrow(split, schema)
-        return Dataset(self.spark, df, self.template, tgt, self.split_vars)
+        return self._then(split, chunks=tgt)
 
     def consolidate_fully(self) -> "Dataset":
         """Merge + concat everything into one chunk (reference
@@ -2211,13 +2247,16 @@ class Dataset:
         of MB, and ``applyInPandas`` would copy every payload twice more
         (Arrow → pandas object cells, pandas → Arrow on return). Here the
         payloads are decoded zero-copy straight from the Arrow value
-        buffers (``BinaryScalar.as_buffer`` → ``np.frombuffer``) and the
-        assembled block is emitted as a one-row RecordBatch."""
+        buffers (``BinaryScalar.as_buffer`` → ``np.frombuffer``), and the
+        assembled block starts a new chain: the ops after it, up to the
+        sink, run in this same ``applyInArrow``."""
         sizes = self.sizes
         tgt = core.normalize_chunks(target_chunks, sizes)
         dims = self.dims
-        schema = chunk_row_schema(dims)
-        offc = [off_col(d) for d in dims]
+        parts_of = _row_chunks(dims)
+        from xarray_beam_spark.observability import get_counters
+
+        acc_groups = get_counters(self.spark).acc("consolidate.groups")
 
         rounded = self.df
         for d in dims:
@@ -2225,21 +2264,18 @@ class Dataset:
                 f"__tgt_{d}", F.col(off_col(d)) - (F.col(off_col(d)) % F.lit(tgt[d]))
             )
 
-        def assemble(key: tuple, tbl: pa.Table) -> pa.Table:
+        def assemble(key: tuple, tbl: "pa.Table") -> Iterator[Chunk]:
             # key = (vars, tgt offsets...) — group also by vars so
             # var-split datasets consolidate per variable.
+            acc_groups.add(1)
             kvars = key[0].as_py()
             koffs = dict(zip(dims, [int(k.as_py()) for k in key[1:]]))
-            off_arrs = {d: tbl.column(off_col(d)).to_numpy() for d in dims}
-            payloads = tbl.column("payload")
             parts: dict[tuple[int, ...], NDDataset] = {}
-            for i in range(tbl.num_rows):
-                ds = decode_chunk(memoryview(payloads[i].as_buffer()))
+            for offs, _, ds in parts_of(tbl):
                 # index by raw relative offset; the dense remap below
                 # handles any (even irregular) sub-grid
                 idx = tuple(
-                    (int(off_arrs[d][i]) - koffs[d]) if d in ds.sizes else 0
-                    for d in dims
+                    (offs[d] - koffs[d]) if d in ds.sizes else 0 for d in dims
                 )
                 parts[idx] = ds
             # Re-index grid positions densely per dim; validate the grid is
@@ -2268,19 +2304,10 @@ class Dataset:
                         f"{got_size} elements along {d!r}, expected {want} — "
                         f"missing or overlapping sub-chunks"
                     )
-            return pa.Table.from_arrays(
-                [pa.array([koffs[d]], pa.int64()) for d in dims]
-                + [
-                    pa.array([kvars], pa.string()),
-                    pa.array([encode_chunk(merged)], pa.binary()),
-                ],
-                names=[off_col(d) for d in dims] + ["vars", "payload"],
-            )
+            yield koffs, kvars, merged
 
-        df = rounded.groupBy("vars", *[f"__tgt_{d}" for d in dims]).applyInArrow(
-            assemble, schema
-        )
-        return Dataset(self.spark, df, self.template, tgt, self.split_vars)
+        group_by = ("vars", *[f"__tgt_{d}" for d in dims])
+        return Dataset(self.spark, Chain(rounded, assemble, group_by), self.template, tgt, self.split_vars)
 
     def rechunk(
         self,
@@ -2331,7 +2358,7 @@ class Dataset:
             if consolidate_needed:
                 out = out.consolidate_chunks(to)
             else:
-                out = Dataset(out.spark, out.df, out.template, to, out.split_vars)
+                out = out._relabel(chunks=to)
         return out
 
     def _gather_dim(
@@ -3932,6 +3959,17 @@ def explode_chunk_batch(
     return pa.RecordBatch.from_arrays(cols, list(names))
 
 
+def _private_copy(ds: NDDataset) -> NDDataset:
+    """A writable copy of a chunk for user code that may mutate its input
+    in place: upstream stages of a chain hand on read-only views of Arrow
+    buffers, broadcast coordinates and parent chunks."""
+    return NDDataset(
+        {k: Variable(v.dims, v.values.copy()) for k, v in ds.data_vars.items()},
+        {k: Variable(v.dims, v.values.copy()) for k, v in ds.coords.items()},
+        copy.deepcopy(ds.attrs),
+    )
+
+
 def _dummy_chunk(template: Template, chunks: Mapping[str, int]) -> NDDataset:
     sizes = {d: min(chunks.get(d, s), s) for d, s in template.sizes.items()}
     dv = {
@@ -3939,7 +3977,9 @@ def _dummy_chunk(template: Template, chunks: Mapping[str, int]) -> NDDataset:
         for v, (dims, dt) in template.var_meta.items()
     }
     coords = template.coords_for_chunk({d: 0 for d in sizes}, sizes)
-    return NDDataset(dv, coords, template.attrs)
+    # a private copy: the func may mutate its input, and these coords are
+    # views of the driver's template
+    return _private_copy(NDDataset(dv, coords, template.attrs))
 
 
 def _infer_result_meta(

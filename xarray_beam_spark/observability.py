@@ -24,6 +24,8 @@ _ATTR = "_xbs_counters"
 
 # Names mirroring the reference's counter vocabulary
 # (read: core.py:533-535; write: zarr.py:778-781; map: dataset.py:344-348).
+# split.pieces counts the sub-chunks split_chunks emits; consolidate.groups
+# the groups consolidate_chunks/consolidate_variables assemble.
 KNOWN = (
     "read.chunks",
     "read.bytes",

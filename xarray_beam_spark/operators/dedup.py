@@ -94,7 +94,13 @@ def _minhash_aggs(n_hashes: int, col: str = "sh") -> list[Column]:
     was ~0.4 s of driver latency per query construction (measured r16;
     guide §1.2 — the fix is fewer driver↔JVM hops, the parsed expressions
     are identical)."""
-    return [F.expr(f"min(xxhash64({col}, {i})) AS mh{i}") for i in range(n_hashes)]
+    return [F.expr(f"min(xxhash64({_q(col)}, {i})) AS mh{i}") for i in range(n_hashes)]
+
+
+def _q(name: str) -> str:
+    """Backtick-quote an identifier for the parsed SQL strings above, so a
+    column name with spaces, dots or keywords binds as one column."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def band_hash_cols(n_bands: int, rows_per_band: int) -> list[Column]:
@@ -105,7 +111,7 @@ def band_hash_cols(n_bands: int, rows_per_band: int) -> list[Column]:
             "xxhash64({}) AS band{}".format(
                 ", ".join(
                     [str(b)]
-                    + [f"mh{b * rows_per_band + r}" for r in range(rows_per_band)]
+                    + [_q(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
                 ),
                 b,
             )
@@ -149,14 +155,14 @@ def simhash_table(
     # identical
     bit_sums = [
         F.expr(
-            f"sum(CASE WHEN (shiftright(h, {pos}) & 1) = 1 THEN 1 ELSE -1 END)"
+            f"sum(CASE WHEN (shiftright(`h`, {pos}) & 1) = 1 THEN 1 ELSE -1 END)"
             f" AS b{pos}"
         )
         for pos in range(bits)
     ]
     agg = exploded.groupBy(id_col).agg(*bit_sums)
     fp_terms = " + ".join(
-        f"(CASE WHEN b{pos} > 0 THEN shiftleft(CAST(1 AS BIGINT), {pos})"
+        f"(CASE WHEN `b{pos}` > 0 THEN shiftleft(CAST(1 AS BIGINT), {pos})"
         f" ELSE CAST(0 AS BIGINT) END)"
         for pos in range(bits)
     )
