@@ -55,10 +55,13 @@ def _patch_zipimport_invalidate() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches  # type: ignore[method-assign]
 
 
-if (
-    "PYTHON_WORKER_FACTORY_SECRET" in os.environ
-    or "PYTHON_WORKER_FACTORY_SOCK_PATH" in os.environ
-    or "PYTHON_WORKER_FACTORY_SOCK_DIR" in os.environ
-) and not os.environ.get("XBS_DISABLE_ZIPIMPORT_GUARD"):
-    # the env kill-switch exists for A/B measurement and debugging only
+# TCP workers carry the SECRET; Unix-domain-socket workers (the
+# transport session.get_spark selects) carry only SOCK_DIR
+_WORKER_MARKERS = (
+    "PYTHON_WORKER_FACTORY_SECRET",
+    "PYTHON_WORKER_FACTORY_SOCK_PATH",
+    "PYTHON_WORKER_FACTORY_SOCK_DIR",
+)
+
+if any(m in os.environ for m in _WORKER_MARKERS):
     _patch_zipimport_invalidate()

@@ -232,3 +232,22 @@ def test_to_table_folds_into_the_group_node(spark, store):
     plan = table._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1 and plan.count("FlatMapGroupsInArrow") == 1, plan
     assert table.count() == math.prod(SHAPE.values())
+
+
+@pytest.mark.parametrize("rechunk", [False, True])
+def test_write_stats_add_no_job_above_the_write(spark, store, tmp_path, rechunk):
+    """to_zarr sums its per-task stats rows on the driver: the write runs as
+    one SQL execution, with no aggregate or exchange above its Python node."""
+    ds = zarr_io.from_zarr(spark, store).map_blocks(_to_celsius_hpa)
+    node, kw = "MapInArrow", {}
+    if rechunk:
+        ds, node, kw = ds.rechunk(PENCILS), "FlatMapGroupsInArrow", {"zarr_chunks": PENCILS}
+    out = str(tmp_path / "out.zarr")
+    stats = {}
+    plans = _python_nodes(spark, lambda: stats.update(zarr_io.to_zarr(ds, out, **kw)))
+    assert len(plans) == 1, plans
+    tree = _plan_tree(plans[0])
+    above = tree[: tree.index(node)]
+    assert "Aggregate" not in above and "Exchange" not in above, tree
+    pencils = _pencil_count(SHAPE, PENCILS) if rechunk else math.ceil(SHAPE["time"] / PANCAKE)
+    assert stats["chunks_written"] == 2 * pencils

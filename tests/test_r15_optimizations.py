@@ -109,6 +109,22 @@ class TestFromTableInlineCoordIndex:
         ).to_table(dropna=True)
         assert [v for _, v in _rows(got)] == [3.0, 4.0]
 
+    def test_coord_literal_cache_is_bounded(self, spark, monkeypatch):
+        # a time axis that advances every micro-batch must not grow the
+        # driver's literal cache without limit; an axis reused every batch
+        # keeps hitting
+        from pyspark.sql import types as T
+
+        from xarray_beam_spark import dataset
+
+        monkeypatch.setattr(dataset, "_COORD_LIT_CACHE", {})
+        lat = np.arange(3, dtype=np.int64)
+        first = dataset._coord_literal_array(lat, T.LongType())
+        for i in range(1000):
+            dataset._coord_literal_array(np.array([i], dtype=np.int32), T.IntegerType())
+            assert dataset._coord_literal_array(lat.copy(), T.LongType()) is first
+        assert len(dataset._COORD_LIT_CACHE) == dataset._COORD_LIT_CACHE_MAX
+
 
 class TestPairFilterPushdown:
     def test_pair_filter_equals_post_filter(self, spark, sf_dir):

@@ -13,15 +13,25 @@ import sys
 import textwrap
 import zipfile
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the env vars Spark sets in worker and daemon processes: the SECRET over
+# TCP, only SOCK_DIR over Unix domain sockets (session.get_spark's transport)
+WORKER_MARKERS = (
+    "PYTHON_WORKER_FACTORY_SECRET",
+    "PYTHON_WORKER_FACTORY_SOCK_PATH",
+    "PYTHON_WORKER_FACTORY_SOCK_DIR",
+)
 
 
-def _run(code: str, marker: bool) -> str:
+def _run(code: str, marker: str | None) -> str:
     env = dict(os.environ)
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
-    env.pop("PYTHON_WORKER_FACTORY_SECRET", None)
+    for m in WORKER_MARKERS:
+        env.pop(m, None)
     if marker:
-        env["PYTHON_WORKER_FACTORY_SECRET"] = "x"
+        env[marker] = "x"
     out = subprocess.run(
         [sys.executable, "-c", textwrap.dedent(code)],
         capture_output=True,
@@ -32,13 +42,14 @@ def _run(code: str, marker: bool) -> str:
     return out.stdout.strip()
 
 
-def test_patch_applies_only_under_worker_marker():
+@pytest.mark.parametrize("marker", WORKER_MARKERS)
+def test_patch_applies_only_under_worker_marker(marker):
     code = """
     import zipimport
     print(getattr(zipimport.zipimporter.invalidate_caches, "_xbs_guarded", False))
     """
-    assert _run(code, marker=True) == "True"
-    assert _run(code, marker=False) == "False"
+    assert _run(code, marker=marker) == "True"
+    assert _run(code, marker=None) == "False"
 
 
 def test_unchanged_archive_not_reread_but_replaced_archive_is(tmp_path):
@@ -64,7 +75,7 @@ def test_unchanged_archive_not_reread_but_replaced_archive_is(tmp_path):
     n_replaced = len(reads)
     print(n_unchanged, n_replaced, "only_b" in str(sorted(zi._files)))
     """
-    assert _run(code, marker=True) == "0 1 True"
+    assert _run(code, marker="PYTHON_WORKER_FACTORY_SECRET") == "0 1 True"
 
 
 def test_shipped_zip_contains_package_and_sitecustomize(tmp_path):

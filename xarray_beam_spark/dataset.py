@@ -150,6 +150,10 @@ def chunk_row_schema(dims: Sequence[str]) -> T.StructType:
 
 
 _COORD_LIT_CACHE: dict[tuple, object] = {}
+# a streaming job whose time axis advances every micro-batch adds one key
+# per batch; past the cap the least recently used key goes (a hit moves
+# its key to the end of the dict's insertion order)
+_COORD_LIT_CACHE_MAX = 256
 
 
 def _coord_literal_array(vals: np.ndarray, spark_t):
@@ -171,12 +175,14 @@ def _coord_literal_array(vals: np.ndarray, spark_t):
         # .item()s to datetime.datetime
         vals = vals.astype("datetime64[us]")
     key = (vals.dtype.str, vals.tobytes())
-    arr = _COORD_LIT_CACHE.get(key)
+    arr = _COORD_LIT_CACHE.pop(key, None)
     if arr is None:
         arr = F.array(
             *[F.lit(v.item() if hasattr(v, "item") else v).cast(spark_t) for v in vals]
         )
-        _COORD_LIT_CACHE[key] = arr
+        if len(_COORD_LIT_CACHE) >= _COORD_LIT_CACHE_MAX:
+            del _COORD_LIT_CACHE[next(iter(_COORD_LIT_CACHE))]
+    _COORD_LIT_CACHE[key] = arr
     return arr
 
 

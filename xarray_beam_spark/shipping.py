@@ -51,7 +51,10 @@ def tune_session(spark: SparkSession) -> None:
     count for large inputs, but 200-way shuffles of small chunk-row stages
     still pay per-task Python-worker round-trips). Only runtime-mutable
     ``spark.sql.*`` settings are touched — cluster-level sizing (executor
-    memory, core counts) stays whatever the deployment chose.
+    memory, core counts) stays whatever the deployment chose. That includes
+    the Unix-domain-socket worker transport ``session.get_spark`` selects:
+    it is a static conf, so a vanilla session keeps TCP unless it was built
+    with ``spark.python.unix.domain.socket.enabled=true``.
     """
     sc = spark.sparkContext
     # the flag must live on the SESSION: spark.conf is per-session SQLConf,

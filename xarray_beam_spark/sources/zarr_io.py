@@ -28,7 +28,6 @@ from typing import Iterator, Mapping, Sequence
 import numpy as np
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xarray_beam_spark import core
@@ -1005,11 +1004,13 @@ def to_zarr(
             names=["chunks_written", "bytes_written"],
         )
 
-    stats = ds._emit(write, _WRITE_STATS).agg(
-        F.sum("chunks_written").alias("chunks_written"),
-        F.sum("bytes_written").alias("bytes_written"),
-    ).collect()[0]
-    return {"chunks_written": stats[0] or 0, "bytes_written": stats[1] or 0}
+    # one stats row per write task (per output chunk after a consolidate),
+    # summed here: an .agg() would add an exchange and a second job
+    rows = ds._emit(write, _WRITE_STATS).collect()
+    return {
+        "chunks_written": sum(r[0] for r in rows),
+        "bytes_written": sum(r[1] for r in rows),
+    }
 
 
 # Convenience methods on Dataset (no circular import: this module imports
